@@ -1,5 +1,6 @@
 package graft.pcap
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.util
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -23,7 +24,8 @@ import scala.jdk.CollectionConverters._
   * with no driver-side data scan — the 100 TB shape the typed API
   * already has, now reachable from SQL (`CREATE TABLE ... USING pcap`).
   *
-  * Options: `splitBytes` (default 128 MiB). Reference semantics
+  * Options: `splitBytes` (default 128 MiB; positive and at most 2 GiB
+  * less one record overhang, see [[PcapSource.planSplits]]). Reference semantics
   * (/root/reference/BytesProcessor.py:211-268) are inherited from
   * PacketDecoder — dropped frames simply produce no rows.
   */
@@ -52,9 +54,13 @@ object PcapTable {
     StructField("payload", BinaryType, nullable = false),
     StructField("label", StringType, nullable = false)))
 
+  /** `load(a, b, …)` arrives as the `paths` option, a JSON array written
+    * by Spark's own Jackson `ObjectMapper` — decoded with Jackson too, so
+    * a path holding a comma, quote or escaped character survives intact;
+    * a single `load(a)` arrives as `path`. */
   def paths(properties: util.Map[String, String]): Seq[String] = {
     val o = properties.asScala
-    o.get("paths").map(p => p.stripPrefix("[").stripSuffix("]").split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq)
+    o.get("paths").map(p => new ObjectMapper().readValue(p, classOf[Array[String]]).toSeq)
       .orElse(o.get("path").map(Seq(_)))
       .getOrElse(Seq.empty)
   }

@@ -95,6 +95,8 @@ object PcapSource {
 
   def planSplits(spark: SparkSession, paths: Seq[String],
                  targetSplitBytes: Long = 128L * 1024 * 1024): Seq[PcapSplit] = {
+    require(targetSplitBytes > 0 && targetSplitBytes <= MaxSplitBytes,
+      s"targetSplitBytes must be in [1, $MaxSplitBytes], got $targetSplitBytes")
     val conf = spark.sparkContext.hadoopConfiguration
     paths.flatMap { p =>
       val hp = new Path(p)
@@ -221,6 +223,13 @@ object PcapSource {
   /** Largest credible pcapng block (frame + framing + options slack);
     * bounds resync scanning and the cross-split overhang. */
   private val MaxNgBlock = MaxFrame + 4096
+
+  /** Largest split size whose read buffer (split + the larger of the two
+    * framings' overhangs) still fits one JVM array: `readSplitClassic` /
+    * `readSplitNg` size that buffer with `.toInt`, which would wrap past
+    * it and silently drop every record beyond the wrap. */
+  private val MaxSplitBytes: Long =
+    Int.MaxValue.toLong - math.max(MaxFrame + PcapFormat.RecordHeaderLen, MaxNgBlock)
 
   /** pcapng byte-range reader: resynchronize to a BLOCK boundary, then
     * emit the packet blocks whose header starts inside [start, end).

@@ -39,7 +39,7 @@ import java.nio.file.Files
 object StateReadQ {
 
   /** Checkpoint fixture: one completed dedupEvents replay over the shared
-    * 3-file events landing ([[StreamingReplayQ.landingDir]] shape — two
+    * 3-file events landing ([[StreamingReplayQ.eventsLanding]] shape — two
     * repartitioned parts plus the exact-duplicates file), sink discarded,
     * checkpoint published atomically. maxFilesPerTrigger=1 makes the
     * committed range exactly batches 0..2. */
@@ -55,14 +55,11 @@ object StateReadQ {
       s"${sys.props("java.io.tmpdir")}/graft_state_ckpt_p${nShards}_${sys.props("user.name")}$dirTag",
       Seq(s"$dir/events.parquet"))
     if (!Files.exists(java.nio.file.Paths.get(path))) {
-      val landing = StreamingReplayQ.landingDir(spark, dir)
+      val landing = StreamingReplayQ.eventsLanding(spark, dir)
       val build = Files.createTempDirectory("graft_state_ckpt_build")
       val sink = Files.createTempDirectory("graft_state_ckpt_sink")
-      val schema = spark.read.parquet(landing).schema
       val q = graft.streaming.StreamingOps.dedupEvents(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(landing),
-          watermark = "3650 days")
+          StreamingReplayQ.fileStream(spark, landing), watermark = "3650 days")
         .writeStream.format("parquet")
         .option("path", sink.toString)
         .option("checkpointLocation", build.toString)

@@ -2,11 +2,12 @@ package graft.queries
 
 import graft._
 import graft.ops.ColumnOps._
-import graft.streaming.StreamingOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.{DocIn, Event, StreamingOps}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.Files
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType, TimestampType}
+import java.nio.file.{Files, Path, Paths}
 
 /** TRUE streaming paths under the DuckDB oracle gate via deterministic
   * replay (the round-12 verdict's ask): each query stages a landing dir
@@ -27,6 +28,11 @@ import java.nio.file.Files
   * order and batch boundaries. The upsert snapshot's latest-wins order
   * (ts, event_id) is total because event_id is unique.
   *
+  * Shared scaffolding: every landing is built by [[landing]] (one
+  * fixture discipline, one schema per landing) and every replay runs
+  * inside [[replay]] (one scratch sink + checkpoint pair, one read-back,
+  * one cleanup); each key keeps only its own stream and presentation.
+  *
   * 100 TB reading: both shapes are the production ones — keyed state
   * sharded across executors (dedup), and a versioned keyed snapshot
   * rewritten per micro-batch (CDC-apply); the landing fixture grows
@@ -36,11 +42,17 @@ object StreamingReplayQ {
 
   private val tsSec = "yyyy-MM-dd HH:mm:ss"
 
-  private def deleteRecursively(f: java.io.File): Unit =
-    Fixtures.deleteRecursively(f)
+  /** A staged landing dir bound to the schema its builder wrote: a stream
+    * over it ([[fileStream]]) can only be opened with that schema, so a
+    * documents landing can never be read with the events schema. */
+  private[graft] final case class Landing(path: String, schema: StructType)
 
-  private def publishDir(build: java.nio.file.Path, target: String): Unit =
-    Fixtures.publishDir(build, target)
+  /** Every live landing kind. [[fixturePath]] refuses any other kind, so
+    * this set cannot drift from the builders, and [[reapRetiredLandings]]
+    * derives "retired" from it. */
+  private[graft] val LiveKinds = Set("stream_landing", "stream_sessions", "stream_sessions_t5",
+    "stream_docs2", "stream_join3_l", "stream_join3_r", "stream_wmpol3_l", "stream_wmpol3_r",
+    "stream_half2b", "stream_half1b")
 
   // keyed by user.name (fixtures under a shared /tmp, same discipline as
   // PipelineQ.snapshotFixtureDir) AND a content fingerprint of the source
@@ -50,56 +62,91 @@ object StreamingReplayQ {
   // here instead of hand-copying the format.
   private[graft] def fixturePath(kind: String, dir: String,
                                  sourceTable: String = "events"): String = {
-    reapRetiredKinds // common entry point for every landing builder (ADVICE r16)
+    require(LiveKinds(kind), s"unknown landing kind '$kind' — register it in LiveKinds")
+    reapRetiredLandings() // common entry point for every landing (ADVICE r16)
     val dirTag = dir.replaceAll("[^A-Za-z0-9]", "_")
     Fixtures.fingerprintedPath(
       s"${sys.props("java.io.tmpdir")}/graft_${kind}_v2_${sys.props("user.name")}$dirTag",
       Seq(s"$dir/$sourceTable.parquet"))
   }
 
-  /** Landing dir, staged ONCE per (user, source dir) — fixture
-    * discipline: events written as 2 part files plus the duplicates as a
-    * third file, assembled in a unique scratch and published by atomic
-    * rename so a killed JVM never leaves a half-staged landing behind
-    * the guard and racing builders never interleave files. */
-  private[graft] def landingDir(spark: SparkSession, dir: String): String = {
-    val path = fixturePath("stream_landing", dir)
-    if (!Files.exists(java.nio.file.Paths.get(path))) {
-      val build = Files.createTempDirectory("graft_landing_build")
-      val ev = Tables(spark, dir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
+  /** Reap landings of RETIRED kinds. A relayout renames its kind, and the
+    * fingerprint reaper only scans the CURRENT kind's prefix, so every
+    * old kind's dirs would otherwise stay under the shared tmpdir forever
+    * (ADVICE r14). A landing dir is `graft_<kind>_v2_<user><dirTag>_<fp>`;
+    * it is retired when its kind — the text between `graft_` and the
+    * first `_v2_` — is not in [[LiveKinds]]. Matching is whole-kind, so
+    * a live kind that prefixes another ("stream_sessions" vs
+    * "stream_sessions_t5") is never confused with it, and non-landing
+    * `graft_stream_*` dirs (StreamThroughput's watch/out dirs) carry no
+    * `_v2_` infix. Runs on every landing access; only dirs older than
+    * 24 h are deleted (ADVICE r15: a concurrently running JVM from an
+    * older checkout — e.g. a detached long sweep — may still be
+    * mid-replay on a retired-kind landing; no live drive spans a day,
+    * the same horizon the CTAS reap uses). */
+  private def reapRetiredLandings(): Unit = {
+    val cutoff = System.currentTimeMillis() - 24L * 3600 * 1000
+    def retired(name: String): Boolean = name.startsWith("graft_stream_") && {
+      val infix = name.indexOf("_v2_")
+      infix >= 0 && !LiveKinds(name.substring("graft_".length, infix))
+    }
+    Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles()).getOrElse(Array.empty)
+      .filter(f => retired(f.getName) && f.lastModified() < cutoff)
+      .foreach(f => try Fixtures.deleteRecursively(f) catch { case _: Exception => () })
+  }
+
+  /** One landing, staged ONCE per (kind, user, source dir) — fixture
+    * discipline: `write` fills a unique scratch dir from the `source`
+    * table projected onto `schema`'s columns, and the scratch is
+    * published by atomic rename, so a killed JVM never leaves a
+    * half-staged landing behind the exists-guard and racing builders
+    * never interleave files. Each builder supplies only its own
+    * slice-writing body. */
+  private def landing(spark: SparkSession, kind: String, dir: String,
+                      source: String = "events", schema: StructType = eventLandingSchema)
+                     (write: (DataFrame, Path) => Unit): Landing = {
+    val path = fixturePath(kind, dir, source)
+    if (!Files.exists(Paths.get(path))) {
+      val build = Files.createTempDirectory(s"graft_${kind}_build")
+      write(Tables(spark, dir, source).select(schema.fieldNames.map(col).toSeq: _*), build)
+      Fixtures.publishDir(build, path)
+    }
+    Landing(path, schema)
+  }
+
+  /** The shared events landing: events written as 2 part files plus the
+    * exact duplicates (event_id % 10 == 0) as a third file. */
+  private[graft] def eventsLanding(spark: SparkSession, dir: String): Landing =
+    landing(spark, "stream_landing", dir) { (ev, build) =>
       ev.repartition(2).write.mode("overwrite").parquet(build.toString)
       ev.filter(pmod(col("event_id"), lit(10)) === 0)
         .coalesce(1).write.mode("append").parquet(build.toString)
-      publishDir(build, path)
     }
-    path
-  }
 
   /** Static landing schemas (r18, guide §1.2 fixed-cost elimination):
     * every landing's layout is authored by a builder in this file, so the
     * schema is a compile-time constant — inferring it per invocation via
     * `spark.read.parquet(landing).schema` paid a footer-read job per
     * stream construction (two per join replay). All-nullable like the
-    * inferred parquet schema it replaces; column order matches the
-    * builders' `select`. */
-  private[graft] val eventLandingSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
+    * inferred parquet schema it replaces; [[landing]] projects the source
+    * table onto exactly these columns. */
+  private[graft] val eventLandingSchema: StructType =
     StructType(Seq(StructField("event_id", LongType), StructField("ts", TimestampType),
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("value", DoubleType)))
-  }
-  private[graft] val docLandingSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
+  private[graft] val docLandingSchema: StructType =
     StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
-  }
 
-  private[graft] def fileStream(spark: SparkSession, landing: String,
-      schema: org.apache.spark.sql.types.StructType = eventLandingSchema): DataFrame =
-    spark.readStream.schema(schema)
+  private[graft] def fileStream(spark: SparkSession, landing: Landing): DataFrame =
+    spark.readStream.schema(landing.schema)
       .option("maxFilesPerTrigger", "1") // one file per micro-batch
-      .parquet(landing)
+      .parquet(landing.path)
+
+  private def eventStream(spark: SparkSession, landing: Landing): Dataset[Event] =
+    fileStream(spark, landing).as(Encoders.product[Event])
+
+  private def docStream(spark: SparkSession, landing: Landing): Dataset[DocIn] =
+    fileStream(spark, landing).as(Encoders.product[DocIn])
 
   // Delay longer than any fixture's event-time span: nothing is ever
   // late-dropped or evicted, so the replay is batching-independent.
@@ -107,7 +154,7 @@ object StreamingReplayQ {
 
   /** Watermark-advance sentinel offset: 370 days past the real span max,
     * used by BOTH sentinel construction sites ([[writeTimeSlicesOf]] and
-    * [[wmPolicyLandingDir]]) — ADVICE r17 asked for the shared constant.
+    * [[wmPolicyLanding]]) — ADVICE r17 asked for the shared constant.
     * The margin is load-bearing twice over: (a) the wm-policy slow side
     * carries a 365-DAY watermark delay, so its sentinel still lands the
     * per-input watermark 5 days PAST the real span and the flush evicts
@@ -118,14 +165,35 @@ object StreamingReplayQ {
     * join gap − window width), far above any cut between the two. */
   private val SentinelOffsetMs = 370L * 24 * 3600 * 1000
 
-  /** Materialize the query's presentation frame off its scratch sink,
-    * then delete the sink + checkpoint: repeated bench/verify rounds must
-    * not grow /tmp without bound (each stream run writes a fresh sink by
-    * design — the run IS the operator — but its bytes need only outlive
-    * the localCheckpoint that materializes them).
+  /** Post-sink cut for the keys whose sink also holds sentinel-era
+    * windows: real windows start <= t1, sentinel ones ~369-370 d past it,
+    * so any constant strictly between the two — t1 + 24 h — is a safe
+    * separator (1-row driver fetch, same constant traffic as the landing
+    * builders). */
+  private def realSpanWindows(spark: SparkSession, dir: String): Column = {
+    val t1 = Tables(spark, dir, "events").agg(max(col("ts"))).head().getTimestamp(0)
+    col("w_start") <= lit(new java.sql.Timestamp(t1.getTime + 24L * 3600 * 1000))
+  }
+
+  /** Scratch sink + checkpoint pair of one replay run; a two-leg run
+    * splits it per leg with [[sub]]. */
+  private[graft] final case class Scratch(sink: String, ckpt: String) {
+    def sub(leg: String): Scratch = Scratch(s"$sink/$leg", s"$ckpt/$leg")
+  }
+
+  /** One replay run. `body` starts the stream(s) against a fresh scratch
+    * pair — through [[appendParquet]] / [[appendBatches]], which return
+    * once the AvailableNow run has drained — and returns the frame it
+    * reads back off the sink. The runner sorts that frame by `orderBy`,
+    * materializes it with `localCheckpoint`, and deletes both scratch
+    * dirs in a `finally`: repeated bench/verify rounds must not grow /tmp
+    * without bound (each stream run writes a fresh sink by design — the
+    * run IS the operator — but its bytes need only outlive the
+    * localCheckpoint that materializes them), and a failed run must not
+    * strand them either. The failure itself reaches the caller unchanged.
     *
-    * Presentation sorts (r18, guide §2.4 remove shuffles outright): every
-    * caller sorts its read-back frame via `coalesce(1).sortWithinPartitions`
+    * Presentation sorts (r18, guide §2.4 remove shuffles outright): the
+    * read-back frame is sorted via `coalesce(1).sortWithinPartitions`
     * instead of `orderBy` — a global sort range-partitions, which costs a
     * separate SAMPLING job (a second scan of the sink) plus an exchange,
     * all to order a frame bounded by the events/documents grain (≤ ~100k
@@ -135,11 +203,43 @@ object StreamingReplayQ {
     * frames whose size is the DECLARED RESULT's size (small by contract),
     * not a data-scale intermediate — a 100 TB run's heavy lifting happens
     * upstream in the stream itself. */
-  private def materializeAndClean(out: DataFrame, dirs: String*): DataFrame = {
-    val checkpointed = out.localCheckpoint()
-    dirs.foreach(d => deleteRecursively(new java.io.File(d)))
-    checkpointed
+  private[graft] def replay(tag: String, orderBy: String*)(body: Scratch => DataFrame): DataFrame = {
+    val s = Scratch(Files.createTempDirectory(s"graft_${tag}_sink").toString,
+      Files.createTempDirectory(s"graft_${tag}_ckpt").toString)
+    try {
+      val out = body(s)
+      val sorted =
+        if (orderBy.isEmpty) out
+        else out.coalesce(1).sortWithinPartitions(orderBy.head, orderBy.tail: _*)
+      sorted.localCheckpoint()
+    } finally Seq(s.sink, s.ckpt).foreach(d => Fixtures.deleteRecursively(new java.io.File(d)))
   }
+
+  private def drained(q: StreamingQuery): StreamingQuery = { q.awaitTermination(); q }
+
+  /** Start `out` into the scratch pair's append-parquet sink under
+    * Trigger.AvailableNow and wait for the drain. */
+  private[graft] def appendParquet(out: Dataset[_], s: Scratch): StreamingQuery =
+    drained(out.writeStream.format("parquet")
+      .option("path", s.sink)
+      .option("checkpointLocation", s.ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start())
+
+  /** Start `out` in update mode with each micro-batch appended to the
+    * scratch sink as parquet by `foreachBatch`, under Trigger.AvailableNow,
+    * and wait for the drain. `afterBatch` runs after a batch's write but
+    * before its epoch commits — the crash keys' injection point. */
+  private def appendBatches[T](out: Dataset[T], s: Scratch,
+                               afterBatch: Long => Unit = _ => ()): StreamingQuery =
+    drained(out.writeStream.outputMode("update")
+      .option("checkpointLocation", s.ckpt)
+      .foreachBatch { (b: Dataset[T], id: Long) =>
+        b.write.mode("append").parquet(s.sink)
+        afterBatch(id)
+      }
+      .trigger(Trigger.AvailableNow())
+      .start())
 
   /** Streaming exact dedup, end-to-end: landing (with injected exact
     * duplicates) → dropDuplicatesWithinWatermark keyed state → append
@@ -151,26 +251,31 @@ object StreamingReplayQ {
     "st_dedup_replay",
     (spark0, dir) => {
       val spark = tunedStreamSession(spark0)
-      val landing = landingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stdedup_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stdedup_ckpt").toString
-      val q = StreamingOps.dedupEvents(fileStream(spark, landing), SpanProofWatermark)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      val landing = eventsLanding(spark, dir)
+      replay("stdedup", "event_id") { s =>
+        appendParquet(StreamingOps.dedupEvents(fileStream(spark, landing), SpanProofWatermark), s)
+        spark.read.parquet(s.sink)
           .select(col("event_id"), date_format(col("ts"), tsSec).as("ts_s"),
             col("user_id"), col("event_type"), cents(col("value")).as("value_cents"))
-          .coalesce(1).sortWithinPartitions("event_id"),
-        sink, ckpt)
+      }
     },
     Some("""SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
            | user_id, event_type, CAST(round(value*100) AS BIGINT) AS value_cents
            |FROM events ORDER BY event_id""".stripMargin))
+
+  /** One upsert leg: the CDC-apply sink with the scratch sink as its
+    * versioned snapshot dir, under Trigger.AvailableNow, drained. */
+  private def upsertLeg(spark: SparkSession, landing: Landing, s: Scratch,
+                        onBatchApplied: Long => Unit = _ => ()): StreamingQuery =
+    drained(StreamingOps.upsertLatestSink(fileStream(spark, landing), s.sink, s.ckpt,
+      trigger = Some(Trigger.AvailableNow()), onBatchApplied = onBatchApplied))
+
+  /** Read-back of the upsert keys: the newest COMMITTED snapshot version. */
+  private def latestUpsert(spark: SparkSession, s: Scratch): DataFrame =
+    spark.read.parquet(StreamingOps.latestSnapshot(s.sink)
+        .getOrElse(sys.error("no committed snapshot version after replay")))
+      .select(col("user_id"), date_format(col("ts"), tsSec).as("ts_s"),
+        col("event_id"), cents(col("value")).as("value_cents"))
 
   /** Streaming CDC-apply upsert, end-to-end: landing → foreachBatch
     * versioned latest-per-user snapshot ([[StreamingOps.upsertLatestSink]],
@@ -189,20 +294,11 @@ object StreamingReplayQ {
       // against a tiny per-batch frame (same rationale as the stateful
       // replays' 4-partition clone).
       val spark = tunedStreamSession(spark0)
-      val landing = landingDir(spark, dir)
-      val snap = Files.createTempDirectory("graft_stupsert_snap").toString
-      val ckpt = Files.createTempDirectory("graft_stupsert_ckpt").toString
-      val q = StreamingOps.upsertLatestSink(fileStream(spark, landing), snap, ckpt,
-        trigger = Some(Trigger.AvailableNow()))
-      q.awaitTermination()
-      val latest = StreamingOps.latestSnapshot(snap)
-        .getOrElse(sys.error("no committed snapshot version after replay"))
-      materializeAndClean(
-        spark.read.parquet(latest)
-          .select(col("user_id"), date_format(col("ts"), tsSec).as("ts_s"),
-            col("event_id"), cents(col("value")).as("value_cents"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        snap, ckpt)
+      val landing = eventsLanding(spark, dir)
+      replay("stupsert", "user_id") { s =>
+        upsertLeg(spark, landing, s)
+        latestUpsert(spark, s)
+      }
     },
     Some("""SELECT user_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
            | event_id, CAST(round(value*100) AS BIGINT) AS value_cents
@@ -223,26 +319,26 @@ object StreamingReplayQ {
       .getOrElse(sys.error(s"slice $k produced no parquet file"))
     val dest = build.resolve(f"slice-$k%02d.parquet")
     java.nio.file.Files.move(part.toPath, dest)
-    deleteRecursively(scratch.toFile)
+    Fixtures.deleteRecursively(scratch.toFile)
     java.nio.file.Files.setLastModifiedTime(dest,
       java.nio.file.attribute.FileTime.fromMillis(1600000000000L + k * 60000L))
   }
 
-  /** Stage the events table as 4 slices covering equal EVENT-TIME
-    * quarters into `build` (chronological per-key arrival, under which
-    * [[StreamingOps.foldSessions]] is exactly batch gap sessionization —
-    * its spec's pinned property). Returns the (t0, t1) epoch-ms bounds so
-    * callers can append further slices past the data's span. */
-  private def writeTimeSlices(spark: SparkSession, dir: String,
-                              build: java.nio.file.Path): (Long, Long) =
-    writeTimeSlicesOf(
-      Tables(spark, dir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value")),
-      build)
+  /** Epoch-ms (min, max) of an events frame's `ts`: the span every
+    * time-sliced landing cuts. */
+  private def tsBounds(ev: DataFrame): (Long, Long) = {
+    val bounds = ev.agg(min(col("ts")), max(col("ts"))).head()
+    require(!bounds.isNullAt(0),
+      "cannot time-slice an EMPTY events frame — " +
+        "source table (or its parity half) has no rows")
+    (bounds.getTimestamp(0).getTime, bounds.getTimestamp(1).getTime)
+  }
 
-  /** Same slicing over a caller-provided events frame (the stream-stream
-    * join keys slice each parity half separately). `nSlices` defaults to
+  /** Stage an events frame as `nSlices` slices covering equal EVENT-TIME
+    * spans into `build` (chronological per-key arrival, under which
+    * [[StreamingOps.foldSessions]] is exactly batch gap sessionization —
+    * its spec's pinned property; the stream-stream join keys slice each
+    * parity half separately). `nSlices` defaults to
     * the session landing's 4 event-time quarters; the r17 optimization
     * round cut the landings whose oracles are batching-independent down
     * to 2 halves — cross-batch state carry needs ONE boundary, and every
@@ -252,13 +348,8 @@ object StreamingReplayQ {
   private def writeTimeSlicesOf(ev: DataFrame,
                                 build: java.nio.file.Path,
                                 nSlices: Int = 4,
-                                flushSentinelId: Option[Long] = None): (Long, Long) = {
-    val bounds = ev.agg(min(col("ts")), max(col("ts"))).head()
-    require(!bounds.isNullAt(0),
-      s"cannot time-slice an EMPTY events frame into $build — " +
-        "source table (or its parity half) has no rows")
-    val Array(t0, t1) = bounds
-      .toSeq.map(_.asInstanceOf[java.sql.Timestamp].getTime).toArray
+                                flushSentinelId: Option[Long] = None): Unit = {
+    val (t0, t1) = tsBounds(ev)
     val step = math.max(1L, (t1 - t0) / nSlices + 1)
     (0 until nSlices).foreach { k =>
       val lo = t0 + k * step
@@ -299,22 +390,13 @@ object StreamingReplayQ {
       }
       writeSlice(build, k, withSent)
     }
-    (t0, t1)
   }
 
   /** Time-sliced landing for the session replay: 4 files covering equal
     * EVENT-TIME quarters, mtimes set strictly increasing so the file
-    * source admits them chronologically. Unique-scratch build + atomic
-    * publish, like [[landingDir]]. */
-  private[graft] def sessionLandingDir(spark: SparkSession, dir: String): String = {
-    val path = fixturePath("stream_sessions", dir)
-    if (!Files.exists(java.nio.file.Paths.get(path))) {
-      val build = Files.createTempDirectory("graft_sessions_build")
-      writeTimeSlices(spark, dir, build)
-      publishDir(build, path)
-    }
-    path
-  }
+    * source admits them chronologically. */
+  private[graft] def sessionLanding(spark: SparkSession, dir: String): Landing =
+    landing(spark, "stream_sessions", dir)(writeTimeSlicesOf(_, _))
 
   /** Streaming sessionization, end-to-end through the
     * flatMapGroupsWithState machine: time-sliced landing →
@@ -343,24 +425,13 @@ object StreamingReplayQ {
     "st_session_replay",
     (spark0, dir) => {
       val spark = tunedStreamSession(spark0)
-      val landing = timerSessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stsess_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stsess_ckpt").toString
-      val spark2 = spark; import spark2.implicits._
-      val q = StreamingOps.userSessions(
-          fileStream(spark, landing).as[graft.streaming.Event],
-          gapMs = 30L * 60 * 1000, watermark = SpanProofWatermark)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      val landing = timerSessionLanding(spark, dir)
+      replay("stsess", "user_id", "start_ms") { s =>
+        appendParquet(StreamingOps.userSessions(eventStream(spark, landing),
+          gapMs = 30L * 60 * 1000, watermark = SpanProofWatermark), s)
+        spark.read.parquet(s.sink)
           .select(col("user_id"), col("start_ms"), col("end_ms"), col("n_events"))
-          .coalesce(1).sortWithinPartitions("user_id", "start_ms"),
-        sink, ckpt)
+      }
     },
     Some(StreamingBatchQ.sessionIslandsCte + """,
            |s AS (SELECT user_id, sid,
@@ -428,11 +499,8 @@ object StreamingReplayQ {
     * where batch boundaries fall, so one cross-batch boundary pins the
     * state-carry property and each dropped micro-batch saves its fixed
     * store-open/commit cost in all three consumers' floors. */
-  private def docLandingDir(spark: SparkSession, dir: String): String = {
-    val path = fixturePath("stream_docs2", dir, sourceTable = "documents")
-    if (!Files.exists(java.nio.file.Paths.get(path))) {
-      val build = Files.createTempDirectory("graft_docs_build")
-      val docs = Tables(spark, dir, "documents").select(col("doc_id"), col("text"))
+  private def docLanding(spark: SparkSession, dir: String): Landing =
+    landing(spark, "stream_docs2", dir, "documents", docLandingSchema) { (docs, build) =>
       val Array(id0, id1) = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
         .toSeq.map(_.asInstanceOf[Long]).toArray
       val step = math.max(1L, (id1 - id0) / 2 + 1)
@@ -440,10 +508,7 @@ object StreamingReplayQ {
         writeSlice(build, k, docs.filter(
           col("doc_id") >= id0 + k * step && col("doc_id") < id0 + (k + 1) * step))
       }
-      publishDir(build, path)
     }
-    path
-  }
 
   /** Landing for the timer-sessionization gate: the 2 event-time half
     * slices with the watermark-advance sentinel (one synthetic user -1
@@ -454,55 +519,22 @@ object StreamingReplayQ {
     * event-time timers fire — so every real session closes via
     * handleExpiredTimer (or an inline gap split). See
     * [[writeTimeSlicesOf]] for why relying on the no-data batch is safe
-    * and loudly gated. */
-  /** The synthetic events-table sessions turn out to never straddle the
-    * quarter cuts (verified at sf0.001 AND sf0.01: zero sessions with
+    * and loudly gated.
+    *
+    * The synthetic events-table sessions turn out to never straddle the
+    * slice cuts (verified at sf0.001 AND sf0.01: zero sessions with
     * events on both sides of a cut) — so a landing of the raw table
     * exercises cross-batch state CARRY but never cross-batch session
     * MERGE. Inject one straddler: user -2 with two events 5 minutes on
-    * either side of the second cut (10-minute gap ≪ the 30-minute
+    * either side of the mid-span cut (10-minute gap ≪ the 30-minute
     * session gap ⇒ ONE session whose two events arrive in different
     * micro-batches, forcing the merge/stitch path in every consumer of
     * this landing). Straddler rows carry event_type "sentinel" and a
     * negative user id, so every consumer's existing output filter drops
     * them and the oracles over the ORIGINAL events are unchanged. */
-  /** One-time reap of landings from RETIRED fixture kinds: the t → t3
-    * rename orphaned old `graft_stream_sessions_t*_v2_*` dirs forever,
-    * because the fingerprint reaper only scans the CURRENT kind's prefix
-    * (ADVICE r14). Lazy — runs once per JVM, before the first
-    * timer-session landing is addressed. Matching is whole-kind: the
-    * live "…_t3_v2_" prefix does not start with either retired prefix.
-    * Only dirs older than 24 h are deleted (ADVICE r15: a concurrently
-    * running JVM from an older checkout — e.g. a detached long sweep —
-    * may still be mid-replay on a retired-kind landing; no live drive
-    * spans a day, the same horizon the CTAS reap uses). */
-  private lazy val reapRetiredKinds: Unit = {
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val retired = Seq("graft_stream_sessions_t_v2_", "graft_stream_sessions_t2_v2_",
-      "graft_stream_half1_v2_", "graft_stream_wmpol_l_v2_", "graft_stream_wmpol_r_v2_",
-      // r17 half-slice relayouts (fewer micro-batches per replay):
-      "graft_stream_sessions_t3_v2_", "graft_stream_join_l_v2_",
-      "graft_stream_join_r_v2_", "graft_stream_docs_v2_", "graft_stream_half2_v2_",
-      // r17 second pass (sentinel embedded in the last real slice,
-      // flush via the engine's no-data batch):
-      "graft_stream_sessions_t4_v2_", "graft_stream_join2_l_v2_",
-      "graft_stream_join2_r_v2_", "graft_stream_wmpol2_l_v2_",
-      "graft_stream_wmpol2_r_v2_")
-    val cutoff = System.currentTimeMillis() - 24L * 3600 * 1000
-    Option(tmp.listFiles()).getOrElse(Array.empty)
-      .filter(f => retired.exists(f.getName.startsWith) && f.lastModified() < cutoff)
-      .foreach(f => try Fixtures.deleteRecursively(f) catch { case _: Exception => () })
-  }
-
-  private[graft] def timerSessionLandingDir(spark: SparkSession, dir: String): String = {
-    val path = fixturePath("stream_sessions_t5", dir)
-    if (!Files.exists(java.nio.file.Paths.get(path))) {
-      val build = Files.createTempDirectory("graft_sessions_t_build")
-      val ev = Tables(spark, dir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val Array(t0, t1) = ev.agg(min(col("ts")), max(col("ts"))).head()
-        .toSeq.map(_.asInstanceOf[java.sql.Timestamp].getTime).toArray
+  private[graft] def timerSessionLanding(spark: SparkSession, dir: String): Landing =
+    landing(spark, "stream_sessions_t5", dir) { (ev, build) =>
+      val (t0, t1) = tsBounds(ev)
       // 2 event-time halves, not 4 quarters (r17): all four consumers'
       // oracles are batch twins independent of batch boundaries, so the
       // single mid-span cut (straddled by the injected user) pins the
@@ -516,14 +548,11 @@ object StreamingReplayQ {
         s"events span too short to place a straddler around cut $cut")
       val spark2 = spark; import spark2.implicits._
       val straddler = Seq(
-        graft.streaming.Event(-10L, new java.sql.Timestamp(cut - m5), -2L, "sentinel", 0.0),
-        graft.streaming.Event(-11L, new java.sql.Timestamp(cut + m5), -2L, "sentinel", 0.0)).toDF()
+        Event(-10L, new java.sql.Timestamp(cut - m5), -2L, "sentinel", 0.0),
+        Event(-11L, new java.sql.Timestamp(cut + m5), -2L, "sentinel", 0.0)).toDF()
       writeTimeSlicesOf(ev.unionByName(straddler), build, nSlices = 2,
         flushSentinelId = Some(-1L))
-      publishDir(build, path)
     }
-    path
-  }
 
   /** Per-user running totals through transformWithState ValueState,
     * end-to-end: 4 chronological micro-batches, one Update-mode row per
@@ -538,22 +567,10 @@ object StreamingReplayQ {
   val stRunningTotals: Q = Q(
     "st_running_totals",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
-      val landing = sessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_sttotals_sink").toString
-      val ckpt = Files.createTempDirectory("graft_sttotals_ckpt").toString
-      val spark2 = spark; import spark2.implicits._
-      val q = StreamingOps.runningTotals(
-          fileStream(spark, landing).as[graft.streaming.Event])
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.UserTotal], _: Long) =>
-          b.write.mode("append").parquet(sink); ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      val landing = sessionLanding(spark, dir)
+      replay("sttotals", "user_id") { s =>
+        appendBatches(StreamingOps.runningTotals(eventStream(spark, landing)), s)
+        spark.read.parquet(s.sink)
           .groupBy(col("user_id"))
           .agg(
             countDistinct(col("n_events")).as("n_updates"),
@@ -561,8 +578,7 @@ object StreamingReplayQ {
           .select(col("user_id"), col("n_updates"),
             col("s.n_events").as("n_events"),
             col("s.value_micro_total").as("value_micro_total"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
+      }
     }},
     Some("""WITH b AS (SELECT MIN(epoch_ms(ts)) AS t0, MAX(epoch_ms(ts)) AS t1 FROM events),
            |e AS (SELECT user_id, value,
@@ -587,28 +603,15 @@ object StreamingReplayQ {
   val stTypeMapState: Q = Q(
     "st_type_map_state",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
-      val landing = sessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_sttypemap_sink").toString
-      val ckpt = Files.createTempDirectory("graft_sttypemap_ckpt").toString
-      val spark2 = spark; import spark2.implicits._
-      val q = StreamingOps.userTypeSummaries(
-          fileStream(spark, landing).as[graft.streaming.Event])
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.UserTypeSummary], _: Long) =>
-          b.write.mode("append").parquet(sink); ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      val landing = sessionLanding(spark, dir)
+      replay("sttypemap", "user_id") { s =>
+        appendBatches(StreamingOps.userTypeSummaries(eventStream(spark, landing)), s)
+        spark.read.parquet(s.sink)
           .groupBy(col("user_id"))
           .agg(max(struct(col("n_events"), col("n_batches"), col("types_str"))).as("s"))
           .select(col("user_id"), col("s.n_batches").as("n_batches"),
             col("s.n_events").as("n_events"), col("s.types_str").as("types_str"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
+      }
     }},
     Some("""WITH b AS (SELECT MIN(epoch_ms(ts)) AS t0, MAX(epoch_ms(ts)) AS t1 FROM events),
            |e AS (SELECT user_id, COALESCE(event_type, '∅') AS et,
@@ -636,23 +639,11 @@ object StreamingReplayQ {
   val stSpanVerdicts: Q = Q(
     "st_span_verdicts",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
-      val landing = docLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stspan_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stspan_ckpt").toString
-      val spark2 = spark; import spark2.implicits._
-      val q = StreamingOps.spanVerdicts(
-          fileStream(spark, landing, docLandingSchema).as[graft.streaming.DocIn])
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
-          .select(col("doc_id"), col("span_idx"), col("dup"))
-          .coalesce(1).sortWithinPartitions("doc_id", "span_idx"),
-        sink, ckpt)
+      val landing = docLanding(spark, dir)
+      replay("stspan", "doc_id", "span_idx") { s =>
+        appendParquet(StreamingOps.spanVerdicts(docStream(spark, landing)), s)
+        spark.read.parquet(s.sink).select(col("doc_id"), col("span_idx"), col("dup"))
+      }
     }},
     Some("""WITH d AS (SELECT doc_id,
            |  list_filter(string_split(text, ' '), x -> len(x) > 0) AS toks FROM documents),
@@ -681,39 +672,28 @@ object StreamingReplayQ {
   val stHeavyHitters: Q = Q(
     "st_heavy_hitters",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
-      val landing = docLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_sthh_sink").toString
-      val ckpt = Files.createTempDirectory("graft_sthh_ckpt").toString
+      val landing = docLanding(spark, dir)
       val spark2 = spark; import spark2.implicits._
       val k = 32
-      val toks = fileStream(spark, landing, docLandingSchema).as[graft.streaming.DocIn]
-        .flatMap(d => d.text.split(" ").iterator
-          .filter(_.nonEmpty).map(graft.streaming.TokIn(_)))
-      val q = StreamingOps.bucketHeavyHitters(toks, k = k, buckets = 32)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.BucketHitters], _: Long) =>
-          b.write.mode("append").parquet(sink); ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val summaries = spark.read.parquet(sink)
-      val seenTotal = summaries.groupBy(col("bucket"))
-        .agg(max(col("seen")).as("s")).agg(sum(col("s"))).head().getLong(0)
-      val cands = summaries.select(explode(col("fps")).as("fp")).distinct()
-      val tokens = Tables(spark, dir, "documents")
-        .select(explode(expr("filter(split(text, ' '), x -> length(x) > 0)")).as("tok"))
-      val n = tokens.count()
-      materializeAndClean(
+      replay("sthh", "tok") { s =>
+        val toks = docStream(spark, landing)
+          .flatMap(d => d.text.split(" ").iterator
+            .filter(_.nonEmpty).map(graft.streaming.TokIn(_)))
+        appendBatches(StreamingOps.bucketHeavyHitters(toks, k = k, buckets = 32), s)
+        val summaries = spark.read.parquet(s.sink)
+        val seenTotal = summaries.groupBy(col("bucket"))
+          .agg(max(col("seen")).as("s")).agg(sum(col("s"))).head().getLong(0)
+        val cands = summaries.select(explode(col("fps")).as("fp")).distinct()
+        val tokens = Tables(spark, dir, "documents")
+          .select(explode(expr("filter(split(text, ' '), x -> length(x) > 0)")).as("tok"))
+        val n = tokens.count()
         tokens.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
           .withColumn("fp", xxhash64(col("tok")))
           .join(cands, "fp") // streamed candidates gate the output
           .filter(col("cnt") * (k + 1) > n)
           .select(col("tok"), col("cnt"),
             lit(n).as("n_total"), lit(seenTotal).as("seen_total"))
-          .coalesce(1).sortWithinPartitions("tok"),
-        sink, ckpt)
+      }
     }},
     Some("""WITH t AS (SELECT unnest(list_filter(string_split(text, ' '), x -> len(x) > 0)) AS tok
            |          FROM documents),
@@ -726,7 +706,7 @@ object StreamingReplayQ {
 
   /** Timer-driven sessionization through transformWithState EVENT-TIME
     * TIMERS, end-to-end: 2 chronological halves with an embedded
-    * watermark sentinel (see [[timerSessionLandingDir]]) force every
+    * watermark sentinel (see [[timerSessionLanding]]) force every
     * real session to close — mid-stream ones inline or via timers as
     * the watermark passes their gap, final ones via handleExpiredTimer
     * during the engine's no-data flush batch. The sink therefore holds
@@ -738,25 +718,14 @@ object StreamingReplayQ {
   val stTimerSessions: Q = Q(
     "st_timer_sessions",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
-      val landing = timerSessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_sttimer_sink").toString
-      val ckpt = Files.createTempDirectory("graft_sttimer_ckpt").toString
-      val spark2 = spark; import spark2.implicits._
-      val q = StreamingOps.timerSessions(
-          fileStream(spark, landing).as[graft.streaming.Event],
-          gapMs = 30L * 60 * 1000, watermark = "30 minutes")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      val landing = timerSessionLanding(spark, dir)
+      replay("sttimer", "user_id", "start_ms") { s =>
+        appendParquet(StreamingOps.timerSessions(eventStream(spark, landing),
+          gapMs = 30L * 60 * 1000, watermark = "30 minutes"), s)
+        spark.read.parquet(s.sink)
           .filter(col("user_id") >= 0) // drop the sentinel's own session
           .select(col("user_id"), col("start_ms"), col("end_ms"), col("n_events"))
-          .coalesce(1).sortWithinPartitions("user_id", "start_ms"),
-        sink, ckpt)
+      }
     }},
     Some(StreamingBatchQ.sessionIslandsCte + """
            |SELECT user_id,
@@ -779,15 +748,8 @@ object StreamingReplayQ {
     * (was 4 files / 5 batches). The inner key shares the fixture —
     * under its span-proof watermark the sentinel is just one more
     * (filtered) row. */
-  private[graft] def joinLandingDir(spark: SparkSession, dir: String, side: Int): String = {
-    val kind = s"stream_join3_${if (side == 0) "l" else "r"}"
-    val path = fixturePath(kind, dir)
-    if (!Files.exists(java.nio.file.Paths.get(path))) {
-      val build = Files.createTempDirectory(s"graft_${kind}_build")
-      val ev = Tables(spark, dir, "events")
-        .filter(pmod(col("event_id"), lit(2)) === side)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
+  private[graft] def joinLanding(spark: SparkSession, dir: String, side: Int): Landing =
+    landing(spark, s"stream_join3_${if (side == 0) "l" else "r"}", dir) { (ev, build) =>
       // 2 event-time halves per side (r17): every join key's oracle is
       // the batch join twin, independent of batch boundaries — the
       // chronological-arrival eviction proofs hold for ANY chronological
@@ -796,24 +758,30 @@ object StreamingReplayQ {
       // right row). The join replays pay the suite's largest per-batch
       // fixed cost (4 join state stores per partition per batch), so
       // every dropped micro-batch is the biggest floor cut available.
-      writeTimeSlicesOf(ev, build, nSlices = 2,
+      writeTimeSlicesOf(ev.filter(pmod(col("event_id"), lit(2)) === side), build, nSlices = 2,
         flushSentinelId = Some(-(side * 2 + 1).toLong))
-      publishDir(build, path)
     }
-    path
+
+  /** The (left, right) file streams over the two join landings. */
+  private def joinStreams(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    (fileStream(spark, joinLanding(spark, dir, 0)), fileStream(spark, joinLanding(spark, dir, 1)))
+
+  /** One stream-stream join replay on the tuned stream session: `join`
+    * over the two join landings into an append sink, read back as the
+    * per-user `aggs` with the sentinel user's rows dropped. */
+  private def joinReplay(spark0: SparkSession, dir: String, tag: String,
+                         join: (DataFrame, DataFrame) => DataFrame)(aggs: Column*): DataFrame = {
+    val spark = tunedStreamSession(spark0)
+    val (left, right) = joinStreams(spark, dir)
+    replay(tag, "user_id") { s =>
+      appendParquet(join(left, right), s)
+      spark.read.parquet(s.sink)
+        .filter(col("user_id") >= 0) // drop the sentinel user's rows (and its self-pairs)
+        .groupBy(col("user_id"))
+        .agg(aggs.head, aggs.tail: _*)
+    }
   }
 
-  /** Watermarked stream-stream INNER join, end-to-end: two real file
-    * streams (even / odd event_id halves of events, each replayed as 6
-    * chronological micro-batches) through [[StreamingOps.timeBoundJoin]]
-    * — per-user pairs within a 30-minute forward window — into an append
-    * sink. The span-proof watermark makes the replay batching-independent
-    * (nothing is evicted, and an inner join emits on arrival of the
-    * second side, so the final sink equals the batch join regardless of
-    * where batch boundaries fall — chronological arrival would guarantee
-    * that even under a finite watermark, see st_outer_join_replay). The
-    * oracle is the DuckDB twin join; lost join state (a dropped buffered
-    * row) loses pairs and hash-fails. */
   /** Session for ALL the stateful-stream replays (joins, windows,
     * session windows, dedup, fMGWS sessions, and the transformWithState
     * family — round 15 widened it from the join/window keys after
@@ -874,32 +842,25 @@ object StreamingReplayQ {
   // knob, not a local one; the joins stay on the session-default
   // HDFS-backed provider.
 
+  /** Watermarked stream-stream INNER join, end-to-end: two real file
+    * streams (even / odd event_id halves of events, each staged as 2
+    * chronological event-time slices and replayed as 3 micro-batches,
+    * the last the engine's no-data flush) through
+    * [[StreamingOps.timeBoundJoin]] — per-user pairs within a 30-minute
+    * forward window — into an append
+    * sink. The span-proof watermark makes the replay batching-independent
+    * (nothing is evicted, and an inner join emits on arrival of the
+    * second side, so the final sink equals the batch join regardless of
+    * where batch boundaries fall — chronological arrival would guarantee
+    * that even under a finite watermark, see st_outer_join_replay). The
+    * oracle is the DuckDB twin join; lost join state (a dropped buffered
+    * row) loses pairs and hash-fails. */
   val stJoinReplay: Q = Q(
     "st_join_replay",
-    (spark0, dir) => {
-      val spark = tunedStreamSession(spark0)
-      val left = joinLandingDir(spark, dir, 0)
-      val right = joinLandingDir(spark, dir, 1)
-      val sink = Files.createTempDirectory("graft_stjoin_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stjoin_ckpt").toString
-      val q = StreamingOps.timeBoundJoin(
-          fileStream(spark, left), fileStream(spark, right),
-          maxGap = "30 minutes", watermark = SpanProofWatermark)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
-          .filter(col("user_id") >= 0) // drop sentinel self-pairs
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_pairs"),
-            sum(col("l_id")).as("l_id_sum"), sum(col("r_id")).as("r_id_sum"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
-    },
+    (spark, dir) => joinReplay(spark, dir, "stjoin", (l, r) =>
+        StreamingOps.timeBoundJoin(l, r, maxGap = "30 minutes", watermark = SpanProofWatermark))(
+      count(lit(1)).as("n_pairs"),
+      sum(col("l_id")).as("l_id_sum"), sum(col("r_id")).as("r_id_sum")),
     Some("""WITH l AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 0),
            |r AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 1),
            |j AS (SELECT l.user_id, l.event_id AS l_id, r.event_id AS r_id
@@ -925,31 +886,11 @@ object StreamingReplayQ {
     * emission (duplicate), or an evicted-too-early match hash-fails. */
   val stOuterJoinReplay: Q = Q(
     "st_outer_join_replay",
-    (spark0, dir) => {
-      val spark = tunedStreamSession(spark0)
-      val left = joinLandingDir(spark, dir, 0)
-      val right = joinLandingDir(spark, dir, 1)
-      val sink = Files.createTempDirectory("graft_stojoin_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stojoin_ckpt").toString
-      val q = StreamingOps.leftOuterTimeBoundJoin(
-          fileStream(spark, left), fileStream(spark, right),
-          maxGap = "30 minutes", watermark = "30 minutes")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
-          .filter(col("user_id") >= 0) // drop the sentinel user's rows
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_rows"),
-            count(col("r_id")).as("n_matched"),
-            sum(col("l_id")).as("l_id_sum"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
-    },
+    (spark, dir) => joinReplay(spark, dir, "stojoin", (l, r) =>
+        StreamingOps.leftOuterTimeBoundJoin(l, r, maxGap = "30 minutes", watermark = "30 minutes"))(
+      count(lit(1)).as("n_rows"),
+      count(col("r_id")).as("n_matched"),
+      sum(col("l_id")).as("l_id_sum")),
     Some("""WITH l AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 0),
            |r AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 1),
            |j AS (SELECT l.user_id, l.event_id AS l_id, r.event_id AS r_id
@@ -970,31 +911,11 @@ object StreamingReplayQ {
     * JOIN twin. */
   val stRightOuterJoinReplay: Q = Q(
     "st_right_outer_join_replay",
-    (spark0, dir) => {
-      val spark = tunedStreamSession(spark0)
-      val left = joinLandingDir(spark, dir, 0)
-      val right = joinLandingDir(spark, dir, 1)
-      val sink = Files.createTempDirectory("graft_strojoin_sink").toString
-      val ckpt = Files.createTempDirectory("graft_strojoin_ckpt").toString
-      val q = StreamingOps.rightOuterTimeBoundJoin(
-          fileStream(spark, left), fileStream(spark, right),
-          maxGap = "30 minutes", watermark = "30 minutes")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
-          .filter(col("user_id") >= 0) // drop the sentinel user's rows
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_rows"),
-            count(col("l_id")).as("n_matched"),
-            sum(col("r_id")).as("r_id_sum"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
-    },
+    (spark, dir) => joinReplay(spark, dir, "strojoin", (l, r) =>
+        StreamingOps.rightOuterTimeBoundJoin(l, r, maxGap = "30 minutes", watermark = "30 minutes"))(
+      count(lit(1)).as("n_rows"),
+      count(col("l_id")).as("n_matched"),
+      sum(col("r_id")).as("r_id_sum")),
     Some("""WITH l AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 0),
            |r AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 1),
            |j AS (SELECT r.user_id, l.event_id AS l_id, r.event_id AS r_id
@@ -1020,34 +941,14 @@ object StreamingReplayQ {
     * double emission, or an evicted-too-early match hash-fails. */
   val stFullOuterJoinReplay: Q = Q(
     "st_full_outer_join_replay",
-    (spark0, dir) => {
-      val spark = tunedStreamSession(spark0)
-      val left = joinLandingDir(spark, dir, 0)
-      val right = joinLandingDir(spark, dir, 1)
-      val sink = Files.createTempDirectory("graft_stfojoin_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stfojoin_ckpt").toString
-      val q = StreamingOps.fullOuterTimeBoundJoin(
-          fileStream(spark, left), fileStream(spark, right),
-          maxGap = "30 minutes", watermark = "30 minutes")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
-          .filter(col("user_id") >= 0) // drop the sentinel user's rows
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_rows"),
-            count(when(col("l_id").isNotNull && col("r_id").isNotNull, lit(1)))
-              .as("n_matched"),
-            count(when(col("r_id").isNull, lit(1))).as("n_left_only"),
-            count(when(col("l_id").isNull, lit(1))).as("n_right_only"),
-            sum(col("l_id")).as("l_id_sum"), sum(col("r_id")).as("r_id_sum"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
-    },
+    (spark, dir) => joinReplay(spark, dir, "stfojoin", (l, r) =>
+        StreamingOps.fullOuterTimeBoundJoin(l, r, maxGap = "30 minutes", watermark = "30 minutes"))(
+      count(lit(1)).as("n_rows"),
+      count(when(col("l_id").isNotNull && col("r_id").isNotNull, lit(1)))
+        .as("n_matched"),
+      count(when(col("r_id").isNull, lit(1))).as("n_left_only"),
+      count(when(col("l_id").isNull, lit(1))).as("n_right_only"),
+      sum(col("l_id")).as("l_id_sum"), sum(col("r_id")).as("r_id_sum")),
     Some("""WITH l AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 0),
            |r AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 1),
            |j AS (SELECT COALESCE(l.user_id, r.user_id) AS user_id,
@@ -1079,27 +980,18 @@ object StreamingReplayQ {
     "st_window_replay",
     (spark0, dir) => {
       val spark = tunedStreamSession(spark0)
-      val landing = timerSessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stwin_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stwin_ckpt").toString
-      val in = fileStream(spark, landing)
-        .withColumn("value", cents(col("value")))
-      val q = StreamingOps.tumblingCounts(in,
-          window_ = "10 minutes", watermark = "30 minutes")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      val landing = timerSessionLanding(spark, dir)
+      replay("stwin", "w_start", "event_type") { s =>
+        val in = fileStream(spark, landing)
+          .withColumn("value", cents(col("value")))
+        appendParquet(StreamingOps.tumblingCounts(in,
+          window_ = "10 minutes", watermark = "30 minutes"), s)
+        spark.read.parquet(s.sink)
           .filter(!(col("event_type") <=> "sentinel")) // null-safe: a NULL type is data, not a sentinel
           .select(date_format(col("w_start"), tsSec).as("w_start"),
             col("event_type"), col("n_events"),
             col("value_sum").as("value_cents"))
-          .coalesce(1).sortWithinPartitions("w_start", "event_type"),
-        sink, ckpt)
+      }
     },
     Some("""SELECT strftime(time_bucket(INTERVAL '10 minutes', CAST(ts AS TIMESTAMP)), '%Y-%m-%d %H:%M:%S') AS w_start,
            | event_type, COUNT(*) AS n_events,
@@ -1121,24 +1013,15 @@ object StreamingReplayQ {
     "st_session_window_replay",
     (spark0, dir) => {
       val spark = tunedStreamSession(spark0)
-      val landing = timerSessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stswin_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stswin_ckpt").toString
-      val q = StreamingOps.sessionCounts(fileStream(spark, landing),
-          gap = "30 minutes", watermark = "30 minutes")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      val landing = timerSessionLanding(spark, dir)
+      replay("stswin", "user_id", "w_start") { s =>
+        appendParquet(StreamingOps.sessionCounts(fileStream(spark, landing),
+          gap = "30 minutes", watermark = "30 minutes"), s)
+        spark.read.parquet(s.sink)
           .filter(col("user_id") >= 0) // drop the sentinel user's sessions
           .select(col("user_id"), date_format(col("w_start"), tsSec).as("w_start"),
             col("n_events"))
-          .coalesce(1).sortWithinPartitions("user_id", "w_start"),
-        sink, ckpt)
+      }
     },
     Some(StreamingBatchQ.sessionIslandsCte + """
            |SELECT user_id, strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS w_start, COUNT(*) AS n_events
@@ -1175,40 +1058,22 @@ object StreamingReplayQ {
     "st_join_window_replay",
     (spark0, dir) => {
       val spark = tunedStreamSession(spark0)
-      val left = joinLandingDir(spark, dir, 0)
-      val right = joinLandingDir(spark, dir, 1)
-      val sink = Files.createTempDirectory("graft_stjwin_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stjwin_ckpt").toString
-      // Real-span bound for the post-sink sentinel-window cut (1-row
-      // driver fetch, same constant traffic as the landing builders).
-      val t1 = Tables(spark, dir, "events")
-        .agg(max(col("ts"))).head().getTimestamp(0)
-      val joined = StreamingOps.timeBoundJoin(
-          fileStream(spark, left), fileStream(spark, right),
+      val (left, right) = joinStreams(spark, dir)
+      val realWindows = realSpanWindows(spark, dir)
+      replay("stjwin", "w_start") { s =>
+        val joined = StreamingOps.timeBoundJoin(left, right,
           maxGap = "30 minutes", watermark = "30 minutes")
-      val q = joined
-        .groupBy(window(col("l_ts"), "10 minutes"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(col("l_id")).as("l_id_sum"), sum(col("r_id")).as("r_id_sum"))
-        .select(col("window.start").as("w_start"),
-          col("n_pairs"), col("l_id_sum"), col("r_id_sum"))
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
-          // Cut at t1 + 24 h: real windows start <= t1, sentinel
-          // self-pair windows land ~369 d past t1 — any constant
-          // strictly between the two is a safe separator.
-          .filter(col("w_start") <=
-            lit(new java.sql.Timestamp(t1.getTime + 24L * 3600 * 1000)))
+        appendParquet(joined
+          .groupBy(window(col("l_ts"), "10 minutes"))
+          .agg(count(lit(1)).as("n_pairs"),
+            sum(col("l_id")).as("l_id_sum"), sum(col("r_id")).as("r_id_sum"))
+          .select(col("window.start").as("w_start"),
+            col("n_pairs"), col("l_id_sum"), col("r_id_sum")), s)
+        spark.read.parquet(s.sink)
+          .filter(realWindows) // drop the sentinel self-pair windows
           .select(date_format(col("w_start"), tsSec).as("w_start"),
             col("n_pairs"), col("l_id_sum"), col("r_id_sum"))
-          .coalesce(1).sortWithinPartitions("w_start"),
-        sink, ckpt)
+      }
     },
     Some("""WITH l AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 0),
            |r AS (SELECT user_id, ts, event_id FROM events WHERE event_id % 2 = 1),
@@ -1243,28 +1108,19 @@ object StreamingReplayQ {
   val stWindowTwsReplay: Q = Q(
     "st_window_tws_replay",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
-      val landing = timerSessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stwtws_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stwtws_ckpt").toString
-      val in = fileStream(spark, landing)
-        .withColumn("value", cents(col("value")))
-      val q = StreamingOps.windowRollup(in,
-          window_ = "10 minutes", watermark = "30 minutes")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      val landing = timerSessionLanding(spark, dir)
+      replay("stwtws", "event_type") { s =>
+        val in = fileStream(spark, landing)
+          .withColumn("value", cents(col("value")))
+        appendParquet(StreamingOps.windowRollup(in,
+          window_ = "10 minutes", watermark = "30 minutes"), s)
+        spark.read.parquet(s.sink)
           .filter(!(col("event_type") <=> "sentinel"))
           .groupBy(col("event_type"))
           .agg(max(struct(col("n_windows"), col("ev_total"), col("cents_total"))).as("s"))
           .select(col("event_type"), col("s.n_windows").as("n_windows"),
             col("s.ev_total").as("ev_total"), col("s.cents_total").as("cents_total"))
-          .coalesce(1).sortWithinPartitions("event_type"),
-        sink, ckpt)
+      }
     }},
     Some("""SELECT event_type,
            |  COUNT(DISTINCT time_bucket(INTERVAL '10 minutes', CAST(ts AS TIMESTAMP))) AS n_windows,
@@ -1280,9 +1136,9 @@ object StreamingReplayQ {
     * stateless (array_min over the shingle-hash array — no watermark
     * needed), and a corpus-wide (band, signature) → first-owner
     * registry lives in RocksDB ValueState. The corpus replays over the
-    * doc-id-ordered 4-slice landing, so cross-batch first-claim
+    * doc-id-ordered 2-slice landing, so cross-batch first-claim
     * attribution equals the batch min-doc owner (the st_span_verdicts
-    * argument at band granularity — a doc claiming a band in batch 3
+    * argument at band granularity — a doc claiming a band in batch 1
     * must pair with the batch-0 owner, which only state can know).
     * Gated rollup: (dup_doc, first_doc) pairs agreeing on >= 3 of 6
     * bands — same threshold convention as d_incremental; the oracle is
@@ -1292,33 +1148,22 @@ object StreamingReplayQ {
   val stLshDedup: Q = Q(
     "st_lsh_dedup",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
-      val landing = docLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stlsh_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stlsh_ckpt").toString
-      val spark2 = spark; import spark2.implicits._
-      // Corpus bound (doc_id < 4000): spans both landing slices at
-      // the gated scale, stays a bounded set at every decade (MakeSf
-      // remaps ids upward), and keeps the oracle's DuckDB shingle CTE
-      // feasible — the same reason d_minhash_lsh pins doc_id < 100.
-      val q = StreamingOps.lshBandClaims(
-          fileStream(spark, landing, docLandingSchema).filter(col("doc_id") < 4000)
-            .as[graft.streaming.DocIn])
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      val landing = docLanding(spark, dir)
+      replay("stlsh", "dup_doc", "first_doc") { s =>
+        // Corpus bound (doc_id < 4000): spans both landing slices at
+        // the gated scale, stays a bounded set at every decade (MakeSf
+        // remaps ids upward), and keeps the oracle's DuckDB shingle CTE
+        // feasible — the same reason d_minhash_lsh pins doc_id < 100.
+        appendParquet(StreamingOps.lshBandClaims(
+          docStream(spark, landing).filter(col("doc_id") < 4000)), s)
+        spark.read.parquet(s.sink)
           .filter(col("owner_doc") < col("doc_id"))
           .groupBy(col("doc_id"), col("owner_doc"))
           .agg(countDistinct(col("band")).as("n_bands"))
           .filter(col("n_bands") >= 3)
           .select(col("doc_id").as("dup_doc"),
             col("owner_doc").as("first_doc"), col("n_bands"))
-          .coalesce(1).sortWithinPartitions("dup_doc", "first_doc"),
-        sink, ckpt)
+      }
     }},
     Some {
       import graft.ops.TextHash._
@@ -1388,18 +1233,12 @@ object StreamingReplayQ {
     * days past the real span — see [[writeTimeSlicesOf]] for the
     * no-data-batch contract; this collapsed the r16 5-slice layout's
     * two dedicated sentinel batches). */
-  private def wmPolicyLandingDir(spark: SparkSession, dir: String, side: Int): String = {
-    val path = fixturePath(if (side == 0) "stream_wmpol3_l" else "stream_wmpol3_r", dir)
-    if (!Files.exists(java.nio.file.Paths.get(path))) {
-      val build = Files.createTempDirectory("graft_wmpol_build")
-      val ev = Tables(spark, dir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val Array(t0, t1) = ev.agg(min(col("ts")), max(col("ts"))).head()
-        .toSeq.map(_.asInstanceOf[java.sql.Timestamp].getTime).toArray
+  private def wmPolicyLanding(spark: SparkSession, dir: String, side: Int): Landing =
+    landing(spark, if (side == 0) "stream_wmpol3_l" else "stream_wmpol3_r", dir) { (ev, build) =>
+      val (t0, t1) = tsBounds(ev)
       val cut = t0 + math.max(1L, (t1 - t0) / 4 + 1)
       val q0 = ev.filter(unix_millis(col("ts")) < cut)
-      val sentinel = spark.createDataFrame(Seq(graft.streaming.Event(
+      val sentinel = spark.createDataFrame(Seq(Event(
         -1L - side * 2, new java.sql.Timestamp(t1 + SentinelOffsetMs),
         -1L, "sentinel", 0.0)))
       if (side == 0) {
@@ -1414,16 +1253,13 @@ object StreamingReplayQ {
         // Loud, not silent: with no stragglers the min and max keys
         // degenerate into identical nothing-pinning queries that still
         // pass both oracles (same require discipline as
-        // timerSessionLandingDir's straddler placement).
+        // timerSessionLanding's straddler placement).
         require(late.limit(1).count() > 0,
           s"events quarter 0 spans <= ${WmPolicyLateMarginMs / 60000} min in $dir — " +
             "no stragglers; the watermark-policy keys would not exercise the policy")
         writeSlice(build, 2, late.unionByName(sentinel))
       }
-      publishDir(build, path)
     }
-    path
-  }
 
   /** Shared runner: union of the fast input (30-minute delay) and the
     * slow input (365-DAY delay) into a 10-minute tumbling count keyed by
@@ -1433,35 +1269,24 @@ object StreamingReplayQ {
     * windows land ~370 d out). */
   private def wmPolicyRun(spark: SparkSession, dir: String, policy: String): DataFrame =
     withConfs(spark, "spark.sql.streaming.multipleWatermarkPolicy" -> policy) {
-      val lDir = wmPolicyLandingDir(spark, dir, 0)
-      val rDir = wmPolicyLandingDir(spark, dir, 1)
-      val sink = Files.createTempDirectory(s"graft_wmpol_${policy}_sink").toString
-      val ckpt = Files.createTempDirectory(s"graft_wmpol_${policy}_ckpt").toString
-      val t1 = Tables(spark, dir, "events")
-        .agg(max(col("ts"))).head().getTimestamp(0)
-      val l = fileStream(spark, lDir)
-        .withWatermark("ts", "30 minutes").withColumn("src", lit("l"))
-      val r = fileStream(spark, rDir)
-        .withWatermark("ts", "365 days").withColumn("src", lit("r"))
-      val q = l.unionByName(r)
-        .groupBy(window(col("ts"), "10 minutes"), col("src"))
-        .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("id_sum"))
-        .select(col("window.start").as("w_start"), col("src"),
-          col("n_events"), col("id_sum"))
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
-          .filter(col("w_start") <=
-            lit(new java.sql.Timestamp(t1.getTime + 24L * 3600 * 1000)))
+      val lLanding = wmPolicyLanding(spark, dir, 0)
+      val rLanding = wmPolicyLanding(spark, dir, 1)
+      val realWindows = realSpanWindows(spark, dir)
+      replay(s"wmpol_$policy", "w_start", "src") { s =>
+        val l = fileStream(spark, lLanding)
+          .withWatermark("ts", "30 minutes").withColumn("src", lit("l"))
+        val r = fileStream(spark, rLanding)
+          .withWatermark("ts", "365 days").withColumn("src", lit("r"))
+        appendParquet(l.unionByName(r)
+          .groupBy(window(col("ts"), "10 minutes"), col("src"))
+          .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("id_sum"))
+          .select(col("window.start").as("w_start"), col("src"),
+            col("n_events"), col("id_sum")), s)
+        spark.read.parquet(s.sink)
+          .filter(realWindows)
           .select(date_format(col("w_start"), tsSec).as("w_start"),
             col("src"), col("n_events"), col("id_sum"))
-          .coalesce(1).sortWithinPartitions("w_start", "src"),
-        sink, ckpt)
+      }
     }
 
   /** multipleWatermarkPolicy = MIN (the default) under the gate: the
@@ -1506,6 +1331,24 @@ object StreamingReplayQ {
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(16)
       .exists(x => Option(x.getMessage).exists(_.contains("graft-injected-crash")))
 
+  /** One injected mid-protocol crash after batch `at` is applied, fired at
+    * most once: `apply` is the per-batch hook, and `expect` runs the leg
+    * it must kill — a leg that finishes, or dies of anything else, fails
+    * the key, because then the restart path was never exercised. */
+  private final class InjectedCrash(at: Long) extends Serializable {
+    private val tripped = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def apply(id: Long): Unit =
+      if (id == at && !tripped.getAndSet(true))
+        throw new RuntimeException(s"graft-injected-crash after applying batch $id")
+    def expect(run: String, path: String)(leg: => Unit): Unit = {
+      val died =
+        try { leg; false }
+        catch { case e: Throwable if hasInjectedCrash(e) => true }
+      require(died && tripped.get(),
+        s"injected crash did not kill the $run — the $path path was not exercised")
+    }
+  }
+
   /** Exactly-once as an ORACLE property (round-13 verdict task #3): the
     * upsert replay killed MID-PROTOCOL and restarted. The injected crash
     * fires after applyUpsert writes v=1 but before the micro-batch's
@@ -1524,31 +1367,15 @@ object StreamingReplayQ {
       // froze). Same per-batch snapshot-rewrite rationale as
       // st_upsert_replay, paid twice here.
       val spark = tunedStreamSession(spark0)
-      val landing = landingDir(spark, dir)
-      val snap = Files.createTempDirectory("graft_stcrash_snap").toString
-      val ckpt = Files.createTempDirectory("graft_stcrash_ckpt").toString
-      val tripped = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val q1 = StreamingOps.upsertLatestSink(fileStream(spark, landing), snap, ckpt,
-        trigger = Some(Trigger.AvailableNow()),
-        onBatchApplied = id =>
-          if (id == 1 && !tripped.getAndSet(true))
-            throw new RuntimeException("graft-injected-crash after applying batch 1"))
-      val died =
-        try { q1.awaitTermination(); false }
-        catch { case e: Throwable if hasInjectedCrash(e) => true }
-      require(died && tripped.get(),
-        "injected crash did not kill the first run — the restart path was not exercised")
-      val q2 = StreamingOps.upsertLatestSink(fileStream(spark, landing), snap, ckpt,
-        trigger = Some(Trigger.AvailableNow()))
-      q2.awaitTermination()
-      val latest = StreamingOps.latestSnapshot(snap)
-        .getOrElse(sys.error("no committed snapshot version after crash-replay"))
-      materializeAndClean(
-        spark.read.parquet(latest)
-          .select(col("user_id"), date_format(col("ts"), tsSec).as("ts_s"),
-            col("event_id"), cents(col("value")).as("value_cents"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        snap, ckpt)
+      val landing = eventsLanding(spark, dir)
+      replay("stcrash", "user_id") { s =>
+        val crash = new InjectedCrash(1L)
+        crash.expect("first run", "restart") {
+          upsertLeg(spark, landing, s, onBatchApplied = crash(_))
+        }
+        upsertLeg(spark, landing, s)
+        latestUpsert(spark, s)
+      }
     },
     Some("""SELECT user_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
            | event_id, CAST(round(value*100) AS BIGINT) AS value_cents
@@ -1573,45 +1400,37 @@ object StreamingReplayQ {
     "st_observe_replay",
     (spark0, dir) => {
       val spark = tunedStreamSession(spark0)
-      val landing = sessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stobs_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stobs_ckpt").toString
-      val q = fileStream(spark, landing)
-        .withColumn("value_cents", cents(col("value")))
-        .observe("m",
-          count(lit(1)).as("n_rows"),
-          sum(col("value_cents")).as("cents_sum"),
-          max(col("event_id")).as("max_id"))
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // recentProgress is a RING BUFFER (default cap
-      // spark.sql.streaming.numRecentProgressUpdates = 100): if the
-      // landing ever produced more micro-batches than the cap, the
-      // earliest observed metrics would be silently evicted and the
-      // gated totals would under-count. Fail loudly instead: the
-      // retained progress events must cover every committed batch id
-      // from 0 contiguously (ADVICE r15).
-      val ids = q.recentProgress.toSeq.map(_.batchId).sorted
-      require(ids.nonEmpty && ids.head == 0L &&
-        ids.distinct.size == ids.distinct.max + 1,
-        s"recentProgress ring buffer truncated: batch ids $ids do not " +
-          "cover 0..max contiguously — observed totals would under-count")
-      val ms = q.recentProgress.toSeq
-        .flatMap(p => Option(p.observedMetrics.get("m")))
-      require(ms.nonEmpty, "no observed metrics surfaced in progress events")
-      val nRows = ms.map(_.getAs[Long]("n_rows")).sum
-      val centsSum = ms.flatMap(r => Option(r.getAs[java.lang.Long]("cents_sum")))
-        .map(_.longValue).sum
-      val maxId = ms.flatMap(r => Option(r.getAs[java.lang.Long]("max_id")))
-        .map(_.longValue).max
-      val spark2 = spark; import spark2.implicits._
-      materializeAndClean(
-        Seq((nRows, centsSum, maxId)).toDF("n_rows", "cents_sum", "max_id"),
-        sink, ckpt)
+      val landing = sessionLanding(spark, dir)
+      replay("stobs") { s =>
+        val q = appendParquet(fileStream(spark, landing)
+          .withColumn("value_cents", cents(col("value")))
+          .observe("m",
+            count(lit(1)).as("n_rows"),
+            sum(col("value_cents")).as("cents_sum"),
+            max(col("event_id")).as("max_id")), s)
+        // recentProgress is a RING BUFFER (default cap
+        // spark.sql.streaming.numRecentProgressUpdates = 100): if the
+        // landing ever produced more micro-batches than the cap, the
+        // earliest observed metrics would be silently evicted and the
+        // gated totals would under-count. Fail loudly instead: the
+        // retained progress events must cover every committed batch id
+        // from 0 contiguously (ADVICE r15).
+        val ids = q.recentProgress.toSeq.map(_.batchId).sorted
+        require(ids.nonEmpty && ids.head == 0L &&
+          ids.distinct.size == ids.distinct.max + 1,
+          s"recentProgress ring buffer truncated: batch ids $ids do not " +
+            "cover 0..max contiguously — observed totals would under-count")
+        val ms = q.recentProgress.toSeq
+          .flatMap(p => Option(p.observedMetrics.get("m")))
+        require(ms.nonEmpty, "no observed metrics surfaced in progress events")
+        val nRows = ms.map(_.getAs[Long]("n_rows")).sum
+        val centsSum = ms.flatMap(r => Option(r.getAs[java.lang.Long]("cents_sum")))
+          .map(_.longValue).sum
+        val maxId = ms.flatMap(r => Option(r.getAs[java.lang.Long]("max_id")))
+          .map(_.longValue).max
+        val spark2 = spark; import spark2.implicits._
+        Seq((nRows, centsSum, maxId)).toDF("n_rows", "cents_sum", "max_id")
+      }
     },
     Some("""SELECT COUNT(*) AS n_rows,
            |  CAST(SUM(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS cents_sum,
@@ -1625,21 +1444,25 @@ object StreamingReplayQ {
     * (monotone max(struct) selection), one boundary pins the seeded
     * state's cross-batch carry, and the migration key pays this landing
     * on top of its own source-leg run. */
-  private def halfLandingDir(spark: SparkSession, dir: String): String = {
-    val path = fixturePath("stream_half2b", dir)
-    if (!Files.exists(java.nio.file.Paths.get(path))) {
-      val build = Files.createTempDirectory("graft_half2_build")
-      val ev = Tables(spark, dir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val Array(t0, t1) = ev.agg(min(col("ts")), max(col("ts"))).head()
-        .toSeq.map(_.asInstanceOf[java.sql.Timestamp].getTime).toArray
-      val mid = t0 + (t1 - t0) / 2
-      writeTimeSlicesOf(ev.filter(unix_millis(col("ts")) >= mid), build, nSlices = 2)
-      publishDir(build, path)
+  private def halfLanding(spark: SparkSession, dir: String): Landing =
+    landing(spark, "stream_half2b", dir) { (ev, build) =>
+      writeTimeSlicesOf(ev.filter(unix_millis(col("ts")) >= spanMid(ev)), build, nSlices = 2)
     }
-    path
+
+  /** Epoch-ms midpoint of the events span: the backfill / live-tail cut
+    * shared by the two half landings and st_initial_state's seed. */
+  private def spanMid(ev: DataFrame): Long = {
+    val (t0, t1) = tsBounds(ev)
+    t0 + (t1 - t0) / 2
   }
+
+  /** Final per-user totals off an update-mode totals sink: each user's
+    * monotone max(struct(n_events, …)) row. */
+  private def finalTotals(sink: DataFrame): DataFrame =
+    sink.groupBy(col("user_id"))
+      .agg(max(struct(col("n_events"), col("value_micro_total"))).as("s"))
+      .select(col("user_id"), col("s.n_events").as("n_events"),
+        col("s.value_micro_total").as("value_micro_total"))
 
   /** transformWithState INITIAL STATE under the gate — the
     * backfill-then-stream migration: per-user totals are SEEDED from a
@@ -1656,37 +1479,18 @@ object StreamingReplayQ {
   val stInitialState: Q = Q(
     "st_initial_state",
     (spark0, dir) => { val spark = tunedStreamSession(spark0); withRocksDb(spark) {
-      val landing = halfLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stinit_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stinit_ckpt").toString
+      val landing = halfLanding(spark, dir)
       val spark2 = spark; import spark2.implicits._
-      val ev = Tables(spark, dir, "events")
-      val Array(t0, t1) = ev.agg(min(col("ts")), max(col("ts"))).head()
-        .toSeq.map(_.asInstanceOf[java.sql.Timestamp].getTime).toArray
-      val mid = t0 + (t1 - t0) / 2
-      val seed = ev.filter(unix_millis(col("ts")) < mid)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(expr("CAST(round(value * 1000000) AS BIGINT)")).as("value_micro_total"))
-        .as[graft.streaming.UserTotal]
-      val q = StreamingOps.seededRunningTotals(
-          fileStream(spark, landing).as[graft.streaming.Event], seed)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.UserTotal], _: Long) =>
-          b.write.mode("append").parquet(sink); ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      replay("stinit", "user_id") { s =>
+        val ev = Tables(spark, dir, "events")
+        val seed = ev.filter(unix_millis(col("ts")) < spanMid(ev))
           .groupBy(col("user_id"))
-          .agg(max(struct(col("n_events"), col("value_micro_total"))).as("s"))
-          .select(col("user_id"), col("s.n_events").as("n_events"),
-            col("s.value_micro_total").as("value_micro_total"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
+          .agg(count(lit(1)).as("n_events"),
+            sum(expr("CAST(round(value * 1000000) AS BIGINT)")).as("value_micro_total"))
+          .as[graft.streaming.UserTotal]
+        appendBatches(StreamingOps.seededRunningTotals(eventStream(spark, landing), seed), s)
+        finalTotals(spark.read.parquet(s.sink))
+      }
     }},
     Some("""WITH b AS (SELECT MIN(epoch_ms(ts)) AS t0, MAX(epoch_ms(ts)) AS t1 FROM events),
            |e AS (SELECT user_id, value,
@@ -1701,70 +1505,25 @@ object StreamingReplayQ {
   /** First-half landing for the state-migration key: only events strictly
     * before the full span's epoch midpoint, as 2 chronological slices —
     * the "already running" phase of a stateful job about to be re-scaled.
-    * Exact complement of [[halfLandingDir]]. Two slices, not four: the
+    * Exact complement of [[halfLanding]]. Two slices, not four: the
     * source leg only needs cross-batch state carry to hold (one boundary
     * suffices — batching-independence at depth is st_running_totals'
     * job), and the migration key pays for TWO full stream runs per
     * invocation, so every skipped micro-batch is a real floor saving. */
-  private def half1LandingDir(spark: SparkSession, dir: String): String = {
-    val path = fixturePath("stream_half1b", dir)
-    if (!Files.exists(java.nio.file.Paths.get(path))) {
-      val build = Files.createTempDirectory("graft_half1_build")
-      val ev = Tables(spark, dir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val Array(t0, t1) = ev.agg(min(col("ts")), max(col("ts"))).head()
-        .toSeq.map(_.asInstanceOf[java.sql.Timestamp].getTime).toArray
+  private def half1Landing(spark: SparkSession, dir: String): Landing =
+    landing(spark, "stream_half1b", dir) { (ev, build) =>
+      val (t0, t1) = tsBounds(ev)
       val mid = t0 + (t1 - t0) / 2
       val h1 = ev.filter(unix_millis(col("ts")) < mid)
       val q1 = t0 + (mid - t0) / 2
       writeSlice(build, 0, h1.filter(unix_millis(col("ts")) < q1))
       writeSlice(build, 1, h1.filter(unix_millis(col("ts")) >= q1))
-      publishDir(build, path)
     }
-    path
-  }
 
-  /** Completed source checkpoint for the state-migration key: one
-    * [[StreamingOps.runningTotals]] replay over the FIRST-half landing at
-    * the creating session's shuffle-partition count (the count is frozen
-    * into the checkpoint for its lifetime — that freeze is exactly the
-    * operational wall the migration key exists to climb), RocksDB
-    * provider (TWS requires it), sink discarded. Built per invocation in
-    * a scratch dir and NEVER moved: unlike the dedup checkpoint fixture
-    * ([[StateReadQ.ckptFixture]]), a transformWithState checkpoint
-    * records ABSOLUTE state-schema file paths in its operator metadata,
-    * so a renamed/published TWS checkpoint fails its own schema lookup
-    * on read-back. Caller deletes the returned dir. */
-  private def migSourceCkpt(spark: SparkSession, dir: String): String = {
-    val landing = half1LandingDir(spark, dir)
-    val ckpt = Files.createTempDirectory("graft_mig_src_ckpt")
-    val sink = Files.createTempDirectory("graft_mig_src_sink")
-    // A failure of the seed stream itself must not strand the RocksDB
-    // checkpoint + sink scratch (ADVICE r16: the caller's cleanup only
-    // covers failures AFTER this returns, so repeated failed attempts
-    // grew /tmp by a full checkpoint each).
-    try {
-      val spark2 = spark; import spark2.implicits._
-      val q = StreamingOps.runningTotals(
-          fileStream(spark, landing).as[graft.streaming.Event])
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.UserTotal], _: Long) =>
-          b.write.mode("append").parquet(sink.toString); ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } catch {
-      case e: Throwable =>
-        deleteRecursively(ckpt.toFile)
-        deleteRecursively(sink.toFile)
-        throw e
-    }
-    deleteRecursively(sink.toFile)
-    ckpt.toString
-  }
+  /** State shard count a checkpoint froze at creation. */
+  private def statePartitions(spark: SparkSession, ckpt: String): Int =
+    spark.read.format("state-metadata").load(ckpt)
+      .select(col("numPartitions")).head().getInt(0)
 
   /** 8-partition session clone for the migration TARGET — deliberately
     * different from [[tunedStreamSession]]'s 4, so the migrated
@@ -1780,8 +1539,7 @@ object StreamingReplayQ {
     * key pins end-to-end:
     *
     *   1. a COMPLETED 4-partition runningTotals checkpoint over the
-    *      first-half landing (cross-session fixture, like
-    *      [[StateReadQ.ckptFixture]]);
+    *      first-half landing, rebuilt every invocation;
     *   2. its keyed state extracted through `format("statestore")` with
     *      `stateVarName` — a distributed read, one file set per source
     *      shard, never through the driver;
@@ -1805,54 +1563,40 @@ object StreamingReplayQ {
     "st_state_repartition",
     (spark0, dir) => {
       val src = tunedStreamSession(spark0) // 4-partition source world
-      val srcCkpt = withRocksDb(src) { migSourceCkpt(src, dir) }
       val spark = migStreamSession(spark0) // 8-partition target world
-      // The source checkpoint is rebuilt EVERY invocation (it cannot be
-      // a fixture — TWS metadata pins absolute paths), so a failure
-      // between here and materializeAndClean must not strand a full
-      // RocksDB checkpoint per attempt: delete it on the way out.
-      try withRocksDb(spark) {
-        val srcParts = spark.read.format("state-metadata").load(srcCkpt)
-          .select(col("numPartitions")).head().getInt(0)
+      val landing = halfLanding(spark, dir)
+      // Both legs share one scratch pair, split per leg. The source
+      // checkpoint cannot be a fixture: it is written in place and NEVER
+      // moved, because a transformWithState checkpoint records ABSOLUTE
+      // state-schema file paths in its operator metadata (unlike the
+      // dedup fixture, [[StateReadQ.ckptFixture]]), so a renamed TWS
+      // checkpoint fails its own schema lookup. Rebuilt every invocation,
+      // it is deleted with the rest on success and failure alike.
+      withRocksDb(spark) { replay("stmig", "user_id") { s =>
+        val (srcLeg, tgtLeg) = (s.sub("src"), s.sub("tgt"))
+        // Source leg: runningTotals over the FIRST-half landing at the
+        // creating session's partition count (frozen into the checkpoint
+        // — the operational wall this key climbs), sink unused.
+        withRocksDb(src) {
+          appendBatches(StreamingOps.runningTotals(eventStream(src, half1Landing(src, dir))), srcLeg)
+        }
+        val srcParts = statePartitions(spark, srcLeg.ckpt)
         require(srcParts == 4,
           s"source checkpoint has $srcParts state partitions, expected 4")
         val spark2 = spark; import spark2.implicits._
         val seed = spark.read.format("statestore")
-          .option("path", srcCkpt).option("stateVarName", "totals").load()
+          .option("path", srcLeg.ckpt).option("stateVarName", "totals").load()
           .select(col("key.value").as("user_id"),
             col("value.n").as("n_events"),
             col("value.totalMicro").as("value_micro_total"))
           .as[graft.streaming.UserTotal]
-        val landing = halfLandingDir(spark, dir)
-        val sink = Files.createTempDirectory("graft_stmig_sink").toString
-        val ckpt = Files.createTempDirectory("graft_stmig_ckpt").toString
-        val q = StreamingOps.seededRunningTotals(
-            fileStream(spark, landing).as[graft.streaming.Event], seed)
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.UserTotal], _: Long) =>
-            b.write.mode("append").parquet(sink); ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val tgtParts = spark.read.format("state-metadata").load(ckpt)
-          .select(col("numPartitions")).head().getInt(0)
+        appendBatches(StreamingOps.seededRunningTotals(eventStream(spark, landing), seed), tgtLeg)
+        val tgtParts = statePartitions(spark, tgtLeg.ckpt)
         require(tgtParts == 8,
           s"migrated checkpoint has $tgtParts state partitions, expected 8")
-        materializeAndClean(
-          spark.read.parquet(sink)
-            .groupBy(col("user_id"))
-            .agg(max(struct(col("n_events"), col("value_micro_total"))).as("s"))
-            .select(col("user_id"), col("s.n_events").as("n_events"),
-              col("s.value_micro_total").as("value_micro_total"),
-              lit(tgtParts.toLong).as("n_state_parts"))
-            .coalesce(1).sortWithinPartitions("user_id"),
-          sink, ckpt, srcCkpt)
-      } catch {
-        case e: Throwable =>
-          deleteRecursively(new java.io.File(srcCkpt)); throw e
-      }
+        finalTotals(spark.read.parquet(tgtLeg.sink))
+          .withColumn("n_state_parts", lit(tgtParts.toLong))
+      }}
     },
     Some("""WITH b AS (SELECT MIN(epoch_ms(ts)) AS t0, MAX(epoch_ms(ts)) AS t1 FROM events),
            |e AS (SELECT user_id, value,
@@ -1888,40 +1632,20 @@ object StreamingReplayQ {
         "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider,
         RocksDbChangelog -> "true",
         "spark.sql.streaming.stateStore.encodingFormat" -> "avro") {
-      val landing = sessionLandingDir(spark, dir)
-      val sink = Files.createTempDirectory("graft_stevo_sink").toString
-      val ckpt = Files.createTempDirectory("graft_stevo_ckpt").toString
-      val spark2 = spark; import spark2.implicits._
-      val tripped = new java.util.concurrent.atomic.AtomicBoolean(false)
-      def run(v2: Boolean, crashAfter: Option[Long]) = {
-        val ds = fileStream(spark, landing).as[graft.streaming.Event]
-        val out = if (v2) StreamingOps.evoTotalsV2(ds) else StreamingOps.evoTotalsV1(ds)
-        out.writeStream.outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.EvoOut], id: Long) =>
-            b.write.mode("append").parquet(sink)
-            if (crashAfter.contains(id) && !tripped.getAndSet(true))
-              throw new RuntimeException(s"graft-injected-crash after applying batch $id")
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
-      val q1 = run(v2 = false, crashAfter = Some(1L))
-      val died =
-        try { q1.awaitTermination(); false }
-        catch { case e: Throwable if hasInjectedCrash(e) => true }
-      require(died && tripped.get(),
-        "injected crash did not kill the v1 run — the evolve path was not exercised")
-      val q2 = run(v2 = true, crashAfter = None)
-      q2.awaitTermination()
-      materializeAndClean(
-        spark.read.parquet(sink)
+      val landing = sessionLanding(spark, dir)
+      replay("stevo", "user_id") { s =>
+        val crash = new InjectedCrash(1L)
+        crash.expect("v1 run", "evolve") {
+          appendBatches(StreamingOps.evoTotalsV1(eventStream(spark, landing)), s,
+            afterBatch = crash(_))
+        }
+        appendBatches(StreamingOps.evoTotalsV2(eventStream(spark, landing)), s)
+        spark.read.parquet(s.sink)
           .groupBy(col("user_id"))
           .agg(max(struct(col("n_events"), col("late_micro"))).as("s"))
           .select(col("user_id"), col("s.n_events").as("n_events"),
             col("s.late_micro").as("late_micro"))
-          .coalesce(1).sortWithinPartitions("user_id"),
-        sink, ckpt)
+      }
     }},
     Some("""WITH b AS (SELECT MIN(epoch_ms(ts)) AS t0, MAX(epoch_ms(ts)) AS t1 FROM events),
            |e AS (SELECT user_id, value,

@@ -47,11 +47,12 @@ object StreamScaleProbe {
 
     // 1. Watermarked stream-stream join (the st_join_replay shape).
     {
-      val left = graft.queries.StreamingReplayQ.joinLandingDir(spark, dir, 0)
-      val right = graft.queries.StreamingReplayQ.joinLandingDir(spark, dir, 1)
+      val left = graft.queries.StreamingReplayQ.joinLanding(spark, dir, 0)
+      val right = graft.queries.StreamingReplayQ.joinLanding(spark, dir, 1)
       val sink = Files.createTempDirectory("graft_ssp_join_sink").toString
       val ckpt = Files.createTempDirectory("graft_ssp_join_ckpt").toString
-      def fs(d: String) = graft.queries.StreamingReplayQ.fileStream(spark, d)
+      def fs(l: graft.queries.StreamingReplayQ.Landing) =
+        graft.queries.StreamingReplayQ.fileStream(spark, l)
       val q = graft.streaming.StreamingOps.timeBoundJoin(fs(left), fs(right),
           maxGap = "30 minutes", watermark = "3650 days")
         .writeStream.format("parquet").option("path", sink)
@@ -65,7 +66,7 @@ object StreamScaleProbe {
     {
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val landing = graft.queries.StreamingReplayQ.sessionLandingDir(spark, dir)
+      val landing = graft.queries.StreamingReplayQ.sessionLanding(spark, dir)
       val sink = Files.createTempDirectory("graft_ssp_tws_sink").toString
       val ckpt = Files.createTempDirectory("graft_ssp_tws_ckpt").toString
       val q = graft.streaming.StreamingOps.runningTotals(

@@ -20,7 +20,7 @@ class StateEvolveSpec extends SparkSpec {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val landing = queries.StreamingReplayQ.sessionLandingDir(spark, dir)
+      val landing = queries.StreamingReplayQ.sessionLanding(spark, dir).path
       val sink = Files.createTempDirectory("evospec_sink").toString
       val ckpt = Files.createTempDirectory("evospec_ckpt").toString
       val spark2 = spark; import spark2.implicits._

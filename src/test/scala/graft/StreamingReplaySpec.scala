@@ -177,7 +177,7 @@ class StreamingReplaySpec extends SparkSpec {
     // at sf0.001 and sf0.01) — the landing injects a straddler user to
     // force the merge path; assert over the LANDING that the crossing
     // really exists (and would catch a regression in its construction)
-    val landing = queries.StreamingReplayQ.timerSessionLandingDir(spark, dir)
+    val landing = queries.StreamingReplayQ.timerSessionLanding(spark, dir).path
     val sess = spark.read.parquet(landing)
       .filter(col("user_id") =!= -1L) // drop the far-future watermark sentinels
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))

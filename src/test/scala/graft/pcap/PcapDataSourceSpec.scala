@@ -47,6 +47,31 @@ class PcapDataSourceSpec extends SparkSpec {
     assert(h1.sameElements(h2))
   }
 
+  test("split sizes outside (0, 2 GiB - overhang] are refused by both readers") {
+    // 0 divided by zero; >= 4 GiB wrapped the per-split read buffer's
+    // .toInt and silently dropped every record past the wrap
+    Seq(0L, 5L << 30).foreach { bytes =>
+      intercept[IllegalArgumentException] {
+        PcapSource.packetsSplittable(spark, Seq(pcapFile), targetSplitBytes = bytes)
+      }
+      intercept[IllegalArgumentException] {
+        spark.read.format("pcap").option("splitBytes", bytes).load(pcapFile).count()
+      }
+    }
+  }
+
+  test("load(a, b) decodes the JSON paths option, commas in paths included") {
+    val recs = (0 until 7).map(i => (3000.0 + i, frame("10.2.0.1", "10.9.9.9", 4000 + i, 53, 17)))
+    val commaDir = new java.io.File(Files.createTempDirectory("dsv2").toFile, "dir,with,comma")
+    assert(commaDir.mkdirs())
+    val second = new java.io.File(commaDir, "cap.pcap")
+    Files.write(second.toPath, pcapOf(recs: _*))
+    try {
+      val n = spark.read.format("pcap").load(pcapFile, second.getAbsolutePath).count()
+      assert(n == 400L + 7L, s"expected 407 rows from the two captures, got $n")
+    } finally graft.queries.Fixtures.deleteRecursively(commaDir.getParentFile)
+  }
+
   test("SQL over the connector: CREATE TABLE USING pcap") {
     spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW packets_sql USING pcap OPTIONS (path '$pcapFile')")
     val n = spark.sql("SELECT protocol, COUNT(*) AS n FROM packets_sql GROUP BY protocol ORDER BY protocol")
